@@ -1,9 +1,11 @@
 """IOC extraction kernel — the reference's core competency, as native
 column expressions (SURVEY.md §2.8 T1-T12).
 
-Every function here returns a Column built only from JVM-side
-``pyspark.sql.functions`` — no Python UDFs — so the whole kernel stays
-inside whole-stage codegen and scales linearly with executors.
+Every function here is built only from JVM-side ``pyspark.sql.functions``
+— no Python UDFs — so the whole kernel stays inside whole-stage codegen
+and scales linearly with executors.  The column functions come first;
+two frame helpers at the end (``ioc_arrays`` → ``explode_iocs``) are the
+one message→IOC-row path the batch job and the tweet stream share.
 
 Regex semantics are taken verbatim from the reference:
   - batch patterns:  /root/reference/h-isac.py:70-73
@@ -29,7 +31,7 @@ fixes, each unit-tested):
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # --- extraction patterns (h-isac.py:70-73, verbatim) ---------------------
@@ -93,13 +95,17 @@ def extract_all(text: Column, pattern: str) -> Column:
 
 
 def extract_iocs(body: Column) -> dict[str, Column]:
-    """Four-way extraction over a cleaned body (T1-T4, h-isac.py:69-91).
+    """Four-way extraction over a body, reply chain cut first (T1-T4,
+    h-isac.py:69-91).
 
     Returns {"ip","hash","url","email"} → ArrayType(String) columns with
     refang applied to ips/urls/emails and mailto stripped from emails —
     exactly the post-processing at h-isac.py:82-84 (hashes are left as-is).
     """
-    cleaned = clean_text(body)
+    return _extract_cleaned(clean_text(body))
+
+
+def _extract_cleaned(cleaned: Column) -> dict[str, Column]:
     return {
         "ip": F.transform(extract_all(cleaned, IP_PATTERN), refang),
         "hash": extract_all(cleaned, HASH_PATTERN),
@@ -131,4 +137,40 @@ def classify_ioc(ioc: Column) -> Column:
         .when(host.contains("."), F.lit("url"))
         .when(host.rlike(_CLASSIFY_HASH), F.lit("hash"))
         .otherwise(F.lit("unmatched"))
+    )
+
+
+# --- frame helpers: message rows → IOC rows --------------------------------
+IOC_TYPES = ("ip", "hash", "url", "email")
+
+
+def ioc_arrays(msgs: DataFrame, text: str) -> DataFrame:
+    """One row per message: every column of ``msgs`` but ``text``, plus
+    one IOC array per type (``IOC_TYPES``, named by type).
+
+    The reply cut is projected once per message.  Catalyst does not
+    collapse a costly projection into a consumer that references it more
+    than once, so the four extractors read one cut column instead of
+    each re-running the cut (as a single select of ``extract_iocs`` does).
+    """
+    keep = [c for c in msgs.columns if c != text]
+    cut = msgs.select(*keep, clean_text(F.col(text)).alias(text))
+    return cut.select(
+        *keep,
+        *(c.alias(t) for t, c in _extract_cleaned(F.col(text)).items()),
+    )
+
+
+def explode_iocs(arrays: DataFrame, *out: str | Column) -> DataFrame:
+    """The two-step explode of an ``ioc_arrays`` frame: one row per
+    (message, type, IOC), then ``out`` selected — any column of
+    ``arrays``, plus ``ioc`` and ``type``."""
+    keep = [c for c in arrays.columns if c not in IOC_TYPES]
+    pairs = F.array(
+        *(F.struct(F.lit(t).alias("type"), F.col(t).alias("iocs")) for t in IOC_TYPES)
+    )
+    return (
+        arrays.select(*keep, F.explode(pairs).alias("p"))
+        .select(*keep, F.explode("p.iocs").alias("ioc"), F.col("p.type").alias("type"))
+        .select(*out)
     )

@@ -64,30 +64,35 @@ ioc_rows AS (
 """
 
 
-def ioc_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Canonical 8-column IOC table (README.md:13-29) from the feed."""
+def ioc_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Message-level IOC frame: one row per feed message that passes the
+    subject filter (h-isac.py:158) — id, source, date_received and the
+    four IOC arrays (``K.IOC_TYPES``)."""
     feed = synthetic_feed(spark, sf_dir)
     filtered = feed.filter(F.lower(F.col("subject")).contains("indicator"))
-    iocs = K.extract_iocs(F.col("body"))
-    pairs = F.array(
-        F.struct(F.lit("ip").alias("type"), iocs["ip"].alias("iocs")),
-        F.struct(F.lit("hash").alias("type"), iocs["hash"].alias("iocs")),
-        F.struct(F.lit("url").alias("type"), iocs["url"].alias("iocs")),
-        F.struct(F.lit("email").alias("type"), iocs["email"].alias("iocs")),
+    return K.ioc_arrays(
+        filtered.select("id", "source", "date_received", "body"), "body"
     )
-    return (
-        filtered.select("id", "source", "date_received", F.explode(pairs).alias("p"))
-        .select(
-            "id",
-            F.lit(RUN_DATE).alias("date_added"),
-            "date_received",
-            F.explode(F.col("p.iocs")).alias("ioc"),
-            F.lit("H-ISAC").alias("platform"),
-            "source",
-            F.lit("N/A").alias("tag"),
-            F.col("p.type").alias("type"),
-        )
+
+
+def ioc_rows(msgs: DataFrame) -> DataFrame:
+    """Canonical 8-column IOC table (README.md:13-29) from ``ioc_messages``."""
+    return K.explode_iocs(
+        msgs,
+        "id",
+        F.lit(RUN_DATE).alias("date_added"),
+        "date_received",
+        "ioc",
+        F.lit("H-ISAC").alias("platform"),
+        "source",
+        F.lit("N/A").alias("tag"),
+        "type",
     )
+
+
+def ioc_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Canonical 8-column IOC table (README.md:13-29) from the feed."""
+    return ioc_rows(ioc_messages(spark, sf_dir))
 
 
 @query(

@@ -5,9 +5,12 @@ flushes 1 000-record JSON batches (h-isac.py:11-44); its streaming path
 posts one HTTPS request per IOC (firehose.py:131-133).  Here both become
 partition-parallel batched writers: ``to_json(struct(*))`` happens
 JVM-side (eliminating the injection-prone string templating at
-firehose.py:126-128), and each partition independently buffers and
-flushes ``batch_size`` records, so sink throughput scales with executor
-count instead of being a single synchronous loop.
+firehose.py:126-128), the payloads reach Python as Arrow columns
+(``mapInArrow``), and each partition independently buffers and flushes
+``batch_size`` records, so sink throughput scales with executor count
+instead of being a single synchronous loop.  The KV write is a Dataset
+action (a ``noop`` write), so ``DataFrame.observe`` metrics on its input
+fire on it like on any other sink.
 
 The HTTP transport is injectable (``poster``) — tests inject a collector;
 a real deployment injects a requests-based poster with auth.  No network
@@ -39,23 +42,33 @@ def write_kv_batched(
 ) -> None:
     """Batched KV sink (S5): per-partition buffering with ``batch_size``
     flushes + a final remainder flush — the exact batching contract of
-    h-isac.py:31-43, parallel across partitions.
+    h-isac.py:31-43, parallel across partitions.  The buffer spans the
+    partition's Arrow batches, so flush sizes do not depend on
+    ``spark.sql.execution.arrow.maxRecordsPerBatch``.
 
     ``poster`` receives a list of JSON strings (one batch).  It must be
     picklable (it runs on executors).
     """
 
-    def flush_partition(rows: Iterator[Any]) -> None:
-        buf: list[str] = []
-        for row in rows:
-            buf.append(row.payload)
-            if len(buf) == batch_size:
-                poster(buf)
-                buf = []
+    def flush_partition(batches: Iterator[Any]) -> Iterator[Any]:
+        buf: list[str] = []  # carried across Arrow batches
+        for batch in batches:
+            buf.extend(batch.column(0).to_pylist())
+            full = len(buf) - len(buf) % batch_size
+            for i in range(0, full, batch_size):
+                poster(buf[i : i + batch_size])
+            del buf[:full]
         if buf:  # remainder flush (h-isac.py:41-43)
             poster(buf)
+        return iter(())
 
-    rows_to_json(df).foreachPartition(flush_partition)
+    (
+        rows_to_json(df)
+        .mapInArrow(flush_partition, "payload string")
+        .write.format("noop")
+        .mode("overwrite")
+        .save()
+    )
 
 
 def write_csv(df: DataFrame, path: str, single_file: bool = False) -> None:
@@ -72,12 +85,14 @@ def write_metrics(df: DataFrame, path: str) -> None:
     (h-isac.py:125-139,177-179).  Totals are a query over the table
     (sum over runs), so concurrent runs can't lose updates the way the
     reference's stamp-then-overwrite dance can (SURVEY §4.3.2)."""
-    (
-        df.groupBy("type")
-        .agg(F.count("*").alias("n_iocs"))
-        .withColumn("run_ts", F.current_timestamp())
-        .write.mode("append")
-        .parquet(path)
+    append_metrics(df.groupBy("type").agg(F.count("*").alias("n_iocs")), path)
+
+
+def append_metrics(counts: DataFrame, path: str) -> None:
+    """Append ``counts`` (type string, n_iocs bigint) stamped with the
+    run time to the metrics table at ``path`` — the one metrics writer."""
+    counts.withColumn("run_ts", F.current_timestamp()).write.mode("append").parquet(
+        path
     )
 
 

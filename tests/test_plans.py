@@ -58,6 +58,15 @@ def test_flagship_pipeline_is_all_jvm(spark, sf_dir):
     assert "[codegen id :" in p  # whole-stage codegen spans present
 
 
+def test_reply_cut_is_evaluated_once_per_message(spark, sf_dir):
+    """The four extractors read one projected reply-cut column; the cut
+    regex is not inlined into each of them (batch and tweet paths)."""
+    from cybersecurity_ioc_etl_spark.functions.ioc import _REPLY_CUT
+
+    for name in ("ioc_flagship", "tweet_batch_pipeline"):
+        assert plan(spark, sf_dir, name).count(_REPLY_CUT) == 1, name
+
+
 def test_range_join_is_keyed_not_cartesian(spark, sf_dir):
     p = plan(spark, sf_dir, "click_error_range_join")
     assert "CartesianProduct" not in p

@@ -55,6 +55,32 @@ def test_kv_batching_is_per_partition(spark):
     assert len(batches) <= 4  # at most one flush per partition
 
 
+def test_kv_batching_carries_buffer_across_arrow_batches(spark):
+    """Arrow batches smaller than ``batch_size`` must not shorten the
+    flushes: per partition, every flush is full but one remainder."""
+    from cybersecurity_ioc_etl_spark.sinks.bucketed import scoped_conf
+
+    df = spark.range(0, 37, numPartitions=2).select(
+        F.col("id").alias("ioc"), F.spark_partition_id().alias("part")
+    )
+    out = tempfile.mkdtemp(prefix="kv_")
+    with scoped_conf(spark, "spark.sql.execution.arrow.maxRecordsPerBatch", "3"):
+        write_kv_batched(df, _dir_poster(out), batch_size=5)
+    sizes: dict[int, list[int]] = {}
+    posted = []
+    for batch in _batches(out):
+        rows = [json.loads(p) for p in batch]
+        parts = {r["part"] for r in rows}
+        assert len(parts) == 1  # a flush never spans partitions
+        sizes.setdefault(parts.pop(), []).append(len(batch))
+        posted += [r["ioc"] for r in rows]
+    assert sorted(posted) == list(range(37))
+    assert len(sizes) == 2
+    for got in sizes.values():
+        n = sum(got)
+        assert sorted(got) == sorted([5] * (n // 5) + [n % 5] * (n % 5 > 0))
+
+
 def test_json_payload_injection_safe(spark):
     """A quote inside a field must survive — the reference's string
     templating (firehose.py:126) breaks here; to_json must not."""
