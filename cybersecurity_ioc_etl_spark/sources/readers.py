@@ -13,11 +13,8 @@ the full extract→refang→explode pipeline with non-empty results.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -37,33 +34,10 @@ TABLES = (
 RUN_DATE = "2026-01-01"
 
 
-# inferred parquet schemas by (local path, size, mtime_ns, nanosAsLong):
-# inferring one runs a Spark job to read the footer, on every read
-_SCHEMAS: dict[tuple, StructType] = {}
-
-
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` that infers a local file's schema
-    once: later reads of the unchanged file pass the remembered schema
-    and skip the footer job.  Directories and non-local paths are read
-    as they are."""
-    if not os.path.isfile(path):
-        return spark.read.parquet(path)
-    st = os.stat(path)
-    nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
-    key = (os.path.abspath(path), st.st_size, st.st_mtime_ns, nanos)
-    schema = _SCHEMAS.get(key)
-    if schema is None:
-        df = spark.read.parquet(path)
-        _SCHEMAS[key] = df.schema
-        return df
-    return spark.read.schema(schema).parquet(path)
-
-
 def load_table(
     spark: SparkSession, sf_dir: str, name: str, fan_out: bool = False
 ) -> DataFrame:
-    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
+    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
         df = normalize_event_ts(df)
     if fan_out:
